@@ -107,14 +107,6 @@ def point_in_ring_sql(px: str, py: str,
     return out
 
 
-def ring_bbox(ring: list[tuple[float, float]]
-              ) -> tuple[float, float, float, float]:
-    """(xmin, xmax, ymin, ymax) of the ring — driver-side constants."""
-    xs = [p[0] for p in ring]
-    ys = [p[1] for p in ring]
-    return min(xs), max(xs), min(ys), max(ys)
-
-
 _WKT_SHAPE_RE = re.compile(
     r"^\s*(POLYGON|MULTIPOLYGON)\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL)
 

@@ -960,12 +960,10 @@ FROM events
 
 def ensure_esql_stream_state(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent drained-stream fixture: build once per corpus, serve
-    forever after (same discipline as ``ensure_live_epochs``)."""
-    import json
+    forever after (published with ``artifact.publishing``)."""
     import os
-    import shutil
-    import uuid
 
+    from elasticsearch_hbase_river_spark import artifact
     from elasticsearch_hbase_river_spark.operators.indexed_search import (
         index_path_for,
     )
@@ -975,39 +973,33 @@ def ensure_esql_stream_state(spark: SparkSession, sf_dir: str) -> str:
     )
 
     root = index_path_for(sf_dir) + "-esql-stream-v1"
-    done = os.path.join(root, "_drained.json")
-    if os.path.exists(done):
+    if os.path.exists(os.path.join(root, "_drained.json")):
         return root
-    tmp = f"{root}.tmp-{uuid.uuid4().hex}"
-    src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
-    # 2 source files -> 2 real micro-batch epochs: the multi-epoch merge
-    # this fixture exists to exercise needs >=2 (asserted below), and
-    # each extra micro-batch costs a full foreachBatch tick of fixed
-    # streaming-engine overhead at any data size (r11: 4 -> 2 epochs,
-    # drain ~1 s cheaper, identical merged result — the partials are
-    # exact).
-    (load_table(spark, sf_dir, "events")
-     .select("event_id", "event_type", "value")
-     .repartition(2).write.parquet(src))
-    sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
-           .option("maxFilesPerTrigger", "1").parquet(src))
-    q = start_esql_stream(spark, ESQL_STREAM_TEXT, sdf, state,
-                          os.path.join(tmp, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("esql stream fixture did not drain in 600s")
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
-    if len(epochs) < 2:
-        raise RuntimeError(f"expected >=2 real micro-batches, got {epochs}")
-    with open(os.path.join(tmp, "_drained.json"), "w") as f:
-        json.dump({"epochs": len(epochs)}, f)
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):
-            raise
+    with artifact.publishing(root, "_drained.json") as tmp:
+        src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
+        # 2 source files -> 2 real micro-batch epochs: the multi-epoch merge
+        # this fixture exists to exercise needs >=2 (asserted below), and
+        # each extra micro-batch costs a full foreachBatch tick of fixed
+        # streaming-engine overhead at any data size (r11: 4 -> 2 epochs,
+        # drain ~1 s cheaper, identical merged result — the partials are
+        # exact).
+        (load_table(spark, sf_dir, "events")
+         .select("event_id", "event_type", "value")
+         .repartition(2).write.parquet(src))
+        sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
+               .option("maxFilesPerTrigger", "1").parquet(src))
+        q = start_esql_stream(spark, ESQL_STREAM_TEXT, sdf, state,
+                              os.path.join(tmp, "ckpt"))
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("esql stream fixture did not drain in 600s")
+        epochs = [n for n in os.listdir(os.path.join(state, "partials"))
+                  if n.startswith("epoch=")]
+        if len(epochs) < 2:
+            raise RuntimeError(
+                f"expected >=2 real micro-batches, got {epochs}")
+        artifact.write_json(os.path.join(tmp, "_drained.json"),
+                            {"epochs": len(epochs)})
     return root
 
 
@@ -1490,11 +1482,9 @@ TS metrics
 
 
 def ensure_esql_stream_ts_state(spark: SparkSession, sf_dir: str) -> str:
-    import json
     import os
-    import shutil
-    import uuid
 
+    from elasticsearch_hbase_river_spark import artifact
     from elasticsearch_hbase_river_spark.esql import TimeSeriesSpec
     from elasticsearch_hbase_river_spark.operators.indexed_search import (
         index_path_for,
@@ -1505,39 +1495,33 @@ def ensure_esql_stream_ts_state(spark: SparkSession, sf_dir: str) -> str:
     )
 
     root = index_path_for(sf_dir) + "-esql-stream-ts-v1"
-    done = os.path.join(root, "_drained.json")
-    if os.path.exists(done):
+    if os.path.exists(os.path.join(root, "_drained.json")):
         return root
-    tmp = f"{root}.tmp-{uuid.uuid4().hex}"
-    src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
-    # 2 files -> 2 epochs (same rationale as ensure_esql_stream_state:
-    # >=2 is what the merge demonstration needs; per-epoch tick overhead
-    # is fixed cost). Still not time-partitioned, so a series' bucket
-    # spans both micro-batches.
-    (load_table(spark, sf_dir, "events")
-     .select("event_id", "ts", "user_id", "event_type", "value")
-     .repartition(2).write.parquet(src))
-    sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
-           .option("maxFilesPerTrigger", "1").parquet(src))
-    q = start_esql_stream(
-        spark, ESQL_STREAM_TS_TEXT, sdf, state, os.path.join(tmp, "ckpt"),
-        ts_specs={"metrics": TimeSeriesSpec("ts",
-                                            ("user_id", "event_type"))})
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("esql TS stream fixture did not drain in 600s")
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
-    if len(epochs) < 2:
-        raise RuntimeError(f"expected >=2 real micro-batches, got {epochs}")
-    with open(os.path.join(tmp, "_drained.json"), "w") as f:
-        json.dump({"epochs": len(epochs)}, f)
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):
-            raise
+    with artifact.publishing(root, "_drained.json") as tmp:
+        src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
+        # 2 files -> 2 epochs (same rationale as ensure_esql_stream_state:
+        # >=2 is what the merge demonstration needs; per-epoch tick overhead
+        # is fixed cost). Still not time-partitioned, so a series' bucket
+        # spans both micro-batches.
+        (load_table(spark, sf_dir, "events")
+         .select("event_id", "ts", "user_id", "event_type", "value")
+         .repartition(2).write.parquet(src))
+        sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
+               .option("maxFilesPerTrigger", "1").parquet(src))
+        q = start_esql_stream(
+            spark, ESQL_STREAM_TS_TEXT, sdf, state, os.path.join(tmp, "ckpt"),
+            ts_specs={"metrics": TimeSeriesSpec("ts",
+                                                ("user_id", "event_type"))})
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("esql TS stream fixture did not drain in 600s")
+        epochs = [n for n in os.listdir(os.path.join(state, "partials"))
+                  if n.startswith("epoch=")]
+        if len(epochs) < 2:
+            raise RuntimeError(
+                f"expected >=2 real micro-batches, got {epochs}")
+        artifact.write_json(os.path.join(tmp, "_drained.json"),
+                            {"epochs": len(epochs)})
     return root
 
 

@@ -138,27 +138,9 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_absorbed", "n_chars_kept")
 
 
-def _centroid_lits(centroids: dict[int, list[float]]) -> dict[int, F.Column]:
-    return {c: F.array(*[F.lit(float(v)) for v in vec])
-            for c, vec in sorted(centroids.items())}
-
-
 def _sq_dist(e: F.Column, cen: F.Column) -> F.Column:
     return F.aggregate(F.zip_with(e, cen, lambda x, y: (x - y) * (x - y)),
                        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _assign(emb: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
-    """(vec_id, e, cluster, dist): nearest centroid, ties to lower id —
-    centroids enter as literals, so this is pure map-side codegen."""
-    lits = _centroid_lits(centroids)
-    dists = F.array(*[
-        F.struct(_sq_dist(F.col("e"), cen).alias("d"),
-                 F.lit(c).alias("c"))
-        for c, cen in lits.items()])
-    best = F.array_min(dists)
-    return emb.select("vec_id", "e",
-                      best["c"].alias("cluster"), best["d"].alias("dist"))
 
 
 def _km_argmin(cents: F.Column) -> F.Column:

@@ -34,8 +34,9 @@ the index survives across SparkSessions and processes):
   per index path) and injected into query plans as literals — the way a
   search node holds its segment metadata in memory. ``sum_dl`` makes the
   maintenance update pure integer arithmetic.
-- ``_index_meta.json`` — layout version + bucket count; published
-  atomically (tmp + rename), losers of a same-path build race discard.
+- ``_index_meta.json`` — layout version + bucket count + analyzer mode;
+  the marker the directory is published with (``artifact.publishing``:
+  losers of a same-path build race discard).
 
 Freshness: the index directory name embeds a fingerprint (size + mtime) of
 the source ``documents.parquet`` plus the layout version, so a regenerated
@@ -57,14 +58,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark import artifact
 from elasticsearch_hbase_river_spark.functions.concurrency import run_jobs
 from elasticsearch_hbase_river_spark.functions.determinism import roundn_col
 from elasticsearch_hbase_river_spark.functions.xxh64 import pmod_bucket
@@ -447,85 +447,83 @@ def build_index(spark: SparkSession, docs: DataFrame, path: str,
     # fail loudly on corpora outside the selected analyzer mode's scope —
     # a mis-tokenizing corpus would otherwise pass through a green gate
     assert_analyzable_corpus(docs, mode=mode)
-    preexisting = os.path.exists(os.path.join(path, META))
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with artifact.publishing(path, META) as tmp:
+        # The build is a DAG of independent parquet writes; overlapping the
+        # independent branches lets one write's tasks back-fill executors
+        # freed by another's stragglers (guide §2.6). Dependencies honored:
+        # postings → {tvectors, vocab}; vocab → {vkeys, percslots → percquery
+        # sidecars}; doclen → stats; the doclen chain depends only on the
+        # corpus, so it overlaps the whole postings chain.
+        post = inverted_postings(docs, mode)
+        if "tf_title" not in post.columns:
+            post = post.withColumn("tf_title", _tf_title_col())
+        # doclen comes from the CORPUS, not the postings: zero-token documents
+        # (empty / punctuation-only text) have no postings rows but are still
+        # indexed documents — they count toward N and avgdl, exactly as in ES
+        # (and in the oracle, which aggregates over `documents`).
+        doclen = docs.select(
+            "doc_id",
+            F.size(tokens_for_mode(F.col("text"), mode)).cast("long")
+            .alias("dl"))
 
-    # The build is a DAG of independent parquet writes; overlapping the
-    # independent branches lets one write's tasks back-fill executors
-    # freed by another's stragglers (guide §2.6). Dependencies honored:
-    # postings → {tvectors, vocab}; vocab → {vkeys, percslots → percquery
-    # sidecars}; doclen → stats; the doclen chain depends only on the
-    # corpus, so it overlaps the whole postings chain.
-    post = inverted_postings(docs, mode)
-    if "tf_title" not in post.columns:
-        post = post.withColumn("tf_title", _tf_title_col())
-    # doclen comes from the CORPUS, not the postings: zero-token documents
-    # (empty / punctuation-only text) have no postings rows but are still
-    # indexed documents — they count toward N and avgdl, exactly as in ES
-    # (and in the oracle, which aggregates over `documents`).
-    doclen = docs.select(
-        "doc_id",
-        F.size(tokens_for_mode(F.col("text"), mode)).cast("long")
-        .alias("dl"))
+        def _doclen_chain() -> None:
+            _write_doclen(doclen, tmp)
+            # stats aggregates the LANDED doclen (doc_id, dl rows are
+            # identical to the pre-write relation) instead of re-tokenizing
+            # the corpus a second time.
+            _write_stats_from_doclen(
+                spark, spark.read.parquet(os.path.join(tmp, "doclen")), tmp)
 
-    def _doclen_chain() -> None:
-        _write_doclen(doclen, tmp)
-        # stats aggregates the LANDED doclen (doc_id, dl rows are
-        # identical to the pre-write relation) instead of re-tokenizing
-        # the corpus a second time.
-        _write_stats_from_doclen(
-            spark, spark.read.parquet(os.path.join(tmp, "doclen")), tmp)
+        def _postings_land() -> None:
+            (post.withColumn("tbucket", _tbucket(F.col("token")))
+                 .repartition(N_BUCKETS, "tbucket")
+                 .write.mode("overwrite").partitionBy("tbucket")
+                 .parquet(os.path.join(tmp, "postings")))
 
-    def _postings_land() -> None:
-        (post.withColumn("tbucket", _tbucket(F.col("token")))
-             .repartition(N_BUCKETS, "tbucket")
-             .write.mode("overwrite").partitionBy("tbucket")
-             .parquet(os.path.join(tmp, "postings")))
+        run_jobs(_postings_land, _doclen_chain)
+        landed = spark.read.parquet(os.path.join(tmp, "postings"))
 
-    run_jobs(_postings_land, _doclen_chain)
-    landed = spark.read.parquet(os.path.join(tmp, "postings"))
+        def _tvectors() -> None:
+            (landed.select(_dbucket(F.col("doc_id")).alias("dbucket"),
+                           "doc_id", "token", "tf", "tf_title")
+                   .repartition(N_BUCKETS, "dbucket")
+                   .write.mode("overwrite").partitionBy("dbucket")
+                   .parquet(os.path.join(tmp, "tvectors")))
 
-    def _tvectors() -> None:
-        (landed.select(_dbucket(F.col("doc_id")).alias("dbucket"),
-                       "doc_id", "token", "tf", "tf_title")
-               .repartition(N_BUCKETS, "dbucket")
-               .write.mode("overwrite").partitionBy("dbucket")
-               .parquet(os.path.join(tmp, "tvectors")))
+        def _vocab_chain() -> None:
+            _write_vocab(
+                landed.groupBy("token")
+                .agg(F.count(F.lit(1)).cast("long").alias("df"),
+                     F.sum("tf").cast("long").alias("freq"),
+                     F.sum(F.when(F.col("tf_title") > 0, 1).otherwise(0))
+                     .cast("long").alias("df_title"),
+                     F.sum(F.when(F.col("tf") > F.col("tf_title"), 1)
+                           .otherwise(0))
+                     .cast("long").alias("df_body")), tmp)
+            vocab = spark.read.parquet(os.path.join(tmp, "vocab"))
 
-    def _vocab_chain() -> None:
-        _write_vocab(
-            landed.groupBy("token")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"),
-                 F.sum("tf").cast("long").alias("freq"),
-                 F.sum(F.when(F.col("tf_title") > 0, 1).otherwise(0))
-                 .cast("long").alias("df_title"),
-                 F.sum(F.when(F.col("tf") > F.col("tf_title"), 1)
-                       .otherwise(0))
-                 .cast("long").alias("df_body")), tmp)
-        vocab = spark.read.parquet(os.path.join(tmp, "vocab"))
+            def _vkeys_job() -> None:
+                _write_vkeys(_vkeys_rel(vocab.select("token")), tmp)
 
-        def _vkeys_job() -> None:
-            _write_vkeys(_vkeys_rel(vocab.select("token")), tmp)
+            def _percslots_chain() -> None:
+                # Percolator slot dictionary (layout v6; v7 adds the slot
+                # token's df so rarest-term ranking never re-counts
+                # postings): corpus-derived and epoch-stable, so persisting
+                # it here moves the percolate queries' fixed synthesis stage
+                # (one vocab pass + the slot row_number, ~1 s/query measured
+                # at sf1 in round 7) into the one-time build.
+                from elasticsearch_hbase_river_spark.operators.esagg import (
+                    slot_dictionary,
+                )
+                (slot_dictionary(vocab.select("token", "df")).coalesce(1)
+                 .write.mode("overwrite").parquet(os.path.join(tmp,
+                                                               "percslots")))
+                _write_percquery_sidecars(spark, tmp)
 
-        def _percslots_chain() -> None:
-            # Percolator slot dictionary (layout v6; v7 adds the slot
-            # token's df so rarest-term ranking never re-counts
-            # postings): corpus-derived and epoch-stable, so persisting
-            # it here moves the percolate queries' fixed synthesis stage
-            # (one vocab pass + the slot row_number, ~1 s/query measured
-            # at sf1 in round 7) into the one-time build.
-            from elasticsearch_hbase_river_spark.operators.esagg import (
-                slot_dictionary,
-            )
-            (slot_dictionary(vocab.select("token", "df")).coalesce(1)
-             .write.mode("overwrite").parquet(os.path.join(tmp,
-                                                           "percslots")))
-            _write_percquery_sidecars(spark, tmp)
+            run_jobs(_vkeys_job, _percslots_chain)
 
-        run_jobs(_vkeys_job, _percslots_chain)
-
-    run_jobs(_tvectors, _vocab_chain)
-    _publish(tmp, path, preexisting, mode=mode)
+        run_jobs(_tvectors, _vocab_chain)
+        _stamp_meta(tmp, mode)
 
 
 def _write_stats_from_doclen(spark: SparkSession, doclen: DataFrame,
@@ -596,24 +594,13 @@ def index_mode(path: str) -> str:
         return json.load(f).get("mode", "ascii")
 
 
-def _publish(tmp: str, path: str, preexisting: bool,
-             mode: str = "ascii") -> None:
-    """Atomic publish, same discipline as the vector index: concurrent
-    builders of the SAME immutable path race safely (first rename wins,
-    losers discard); any other rename failure re-raises — stale data
-    standing in for a requested build is silent data loss. The analyzer
-    ``mode`` is stamped into META (same marker discipline as the layout
-    version): mixing tokenizations across build/maintenance is silent
-    corruption, so every maintenance path checks it."""
-    with open(os.path.join(tmp, META), "w") as f:
-        json.dump({"layout": LAYOUT_VERSION, "n_buckets": N_BUCKETS,
-                   "mode": mode}, f)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if preexisting or not os.path.exists(os.path.join(path, META)):
-            raise
+def _stamp_meta(tmp: str, mode: str) -> None:
+    """META, the marker an index directory is published with. It stamps
+    the analyzer ``mode``: mixing tokenizations across build/maintenance
+    is silent corruption, so every maintenance path checks it."""
+    artifact.write_json(os.path.join(tmp, META),
+                        {"layout": LAYOUT_VERSION, "n_buckets": N_BUCKETS,
+                         "mode": mode})
 
 
 # ---------------------------------------------------------------------------
@@ -865,96 +852,99 @@ def apply_epoch_deltas(spark: SparkSession, base_path: str,
     # bounded-collect + saturation-to-full-scan guard (changed_dbuckets)
     dbuckets = changed_dbuckets(changed)
 
-    preexisting = os.path.exists(os.path.join(out_path, META))
-    tmp = f"{out_path}.tmp-{uuid.uuid4().hex}"
-    # Carry-over WITHOUT a global shuffle: the base postings are already
-    # tbucket-partitioned on disk, so reading them WITH the partition
-    # column and writing partitionBy(tbucket) keeps each carry-over task
-    # writing into the buckets it read (bucket-pure once buckets exceed
-    # the split size — the 100 TB case); the delta-sized fresh side
-    # computes its buckets map-side and lands beside them. The initial
-    # build's repartition exchange (corpus-sized, per epoch) is gone —
-    # the merge only moves the bytes it rewrites. Fresh-side tasks can
-    # write a small file per bucket (segment-file fragmentation, bounded
-    # by delta size per epoch); rebuild_index compacts when it matters.
-    pcols = ["token", "doc_id", "tf", "first_pos", "positions", "dl",
-             "tf_title"]
-    base_p = (read_immutable(spark, os.path.join(base_path, "postings"))
-              .join(F.broadcast(changed), "doc_id", "left_anti")
-              .select(*pcols, F.col("tbucket").cast("int").alias("tbucket")))
-    fresh_p = (fresh.withColumn("tf_title", _tf_title_col())
-               .select(*pcols, _tbucket(F.col("token")).alias("tbucket")))
-    (base_p.unionByName(fresh_p)
-     .write.mode("overwrite").partitionBy("tbucket")
-     .parquet(os.path.join(tmp, "postings")))
-    tvcols = ["doc_id", "token", "tf", "tf_title"]
-    base_tv = (read_immutable(spark, os.path.join(base_path, "tvectors"))
-               .join(F.broadcast(changed), "doc_id", "left_anti")
-               .select(*tvcols, F.col("dbucket").cast("int").alias("dbucket")))
-    fresh_tv = (fresh_p.select(*tvcols,
-                               _dbucket(F.col("doc_id")).alias("dbucket")))
-    (base_tv.unionByName(fresh_tv)
-     .write.mode("overwrite").partitionBy("dbucket")
-     .parquet(os.path.join(tmp, "tvectors")))
+    with artifact.publishing(out_path, META) as tmp:
+        # Carry-over WITHOUT a global shuffle: the base postings are already
+        # tbucket-partitioned on disk, so reading them WITH the partition
+        # column and writing partitionBy(tbucket) keeps each carry-over task
+        # writing into the buckets it read (bucket-pure once buckets exceed
+        # the split size — the 100 TB case); the delta-sized fresh side
+        # computes its buckets map-side and lands beside them. The initial
+        # build's repartition exchange (corpus-sized, per epoch) is gone —
+        # the merge only moves the bytes it rewrites. Fresh-side tasks can
+        # write a small file per bucket (segment-file fragmentation, bounded
+        # by delta size per epoch); rebuild_index compacts when it matters.
+        pcols = ["token", "doc_id", "tf", "first_pos", "positions", "dl",
+                 "tf_title"]
+        base_p = (read_immutable(spark, os.path.join(base_path, "postings"))
+                  .join(F.broadcast(changed), "doc_id", "left_anti")
+                  .select(*pcols,
+                          F.col("tbucket").cast("int").alias("tbucket")))
+        fresh_p = (fresh.withColumn("tf_title", _tf_title_col())
+                   .select(*pcols, _tbucket(F.col("token")).alias("tbucket")))
+        (base_p.unionByName(fresh_p)
+         .write.mode("overwrite").partitionBy("tbucket")
+         .parquet(os.path.join(tmp, "postings")))
+        tvcols = ["doc_id", "token", "tf", "tf_title"]
+        base_tv = (read_immutable(spark, os.path.join(base_path, "tvectors"))
+                   .join(F.broadcast(changed), "doc_id", "left_anti")
+                   .select(*tvcols,
+                           F.col("dbucket").cast("int").alias("dbucket")))
+        fresh_tv = (fresh_p.select(*tvcols,
+                                   _dbucket(F.col("doc_id")).alias("dbucket")))
+        (base_tv.unionByName(fresh_tv)
+         .write.mode("overwrite").partitionBy("dbucket")
+         .parquet(os.path.join(tmp, "tvectors")))
 
-    plans = _delta_sidecar_plans(spark, base_path, fresh, fresh_docs, dbuckets)
-    _write_vocab(plans["vocab"], tmp)
-    _write_doclen(plans["doclen"], tmp)
-    _write_vkeys(plans["vkeys"], tmp)
-    # percslots (layout v6): rebuilt from the MERGED vocab — epoch churn
-    # can evict a slot's min-token, so the dictionary can't carry over
-    # blindly. One vocab-sized pass onto ≤ PERC_SLOTS groups, same
-    # cost class as the vkeys refresh above.
-    from elasticsearch_hbase_river_spark.operators.esagg import (
-        slot_dictionary,
-    )
+        plans = _delta_sidecar_plans(spark, base_path, fresh, fresh_docs,
+                                     dbuckets)
+        _write_vocab(plans["vocab"], tmp)
+        _write_doclen(plans["doclen"], tmp)
+        _write_vkeys(plans["vkeys"], tmp)
+        # percslots (layout v6): rebuilt from the MERGED vocab — epoch churn
+        # can evict a slot's min-token, so the dictionary can't carry over
+        # blindly. One vocab-sized pass onto ≤ PERC_SLOTS groups, same
+        # cost class as the vkeys refresh above.
+        from elasticsearch_hbase_river_spark.operators.esagg import (
+            slot_dictionary,
+        )
 
-    (slot_dictionary(spark.read.parquet(os.path.join(tmp, "vocab"))
-                     .select("token", "df"))
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(tmp, "percslots")))
-    _write_percquery_sidecars(spark, tmp)
+        (slot_dictionary(spark.read.parquet(os.path.join(tmp, "vocab"))
+                         .select("token", "df"))
+         .coalesce(1).write.mode("overwrite")
+         .parquet(os.path.join(tmp, "percslots")))
+        _write_percquery_sidecars(spark, tmp)
 
-    from elasticsearch_hbase_river_spark.operators.multifield import (
-        TITLE_LEN,
-    )
+        from elasticsearch_hbase_river_spark.operators.multifield import (
+            TITLE_LEN,
+        )
 
-    st = index_stats(base_path)
+        st = index_stats(base_path)
 
-    def _doc_moments(rel: DataFrame):
-        zero = F.lit(0)
-        return rel.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dl"), zero).alias("dl"),
-            F.coalesce(F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)),
-                       zero).alias("nt"),
-            F.coalesce(F.sum(F.least(F.col("dl"), F.lit(TITLE_LEN))),
-                       zero).alias("st"),
-            F.coalesce(F.sum(F.when(F.col("dl") > TITLE_LEN, 1)
-                             .otherwise(0)), zero).alias("nb"),
-            F.coalesce(F.sum(F.greatest(F.col("dl") - TITLE_LEN,
-                                        F.lit(0))), zero).alias("sb")).first()
+        def _doc_moments(rel: DataFrame):
+            zero = F.lit(0)
+            return rel.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("dl"), zero).alias("dl"),
+                F.coalesce(F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)),
+                           zero).alias("nt"),
+                F.coalesce(F.sum(F.least(F.col("dl"), F.lit(TITLE_LEN))),
+                           zero).alias("st"),
+                F.coalesce(F.sum(F.when(F.col("dl") > TITLE_LEN, 1)
+                                 .otherwise(0)), zero).alias("nb"),
+                F.coalesce(F.sum(F.greatest(F.col("dl") - TITLE_LEN,
+                                            F.lit(0))),
+                           zero).alias("sb")).first()
 
-    removed = _doc_moments(
-        read_doclen(spark, base_path, dbuckets)
-        .join(F.broadcast(changed), "doc_id", "left_semi"))
-    added = _doc_moments(fresh_docs)
+        removed = _doc_moments(
+            read_doclen(spark, base_path, dbuckets)
+            .join(F.broadcast(changed), "doc_id", "left_semi"))
+        added = _doc_moments(fresh_docs)
 
-    def _u(base: int, key: str) -> int:
-        return base - removed[key] + added[key]
+        def _u(base: int, key: str) -> int:
+            return base - removed[key] + added[key]
 
-    n_docs = st["n_docs"] - removed["n"] + added["n"]
-    sum_dl = st["sum_dl"] - removed["dl"] + added["dl"]
-    row = (n_docs, sum_dl, sum_dl / n_docs,
-           _u(st["n_title"], "nt"), _u(st["sum_title"], "st"),
-           _u(st["n_body"], "nb"), _u(st["sum_body"], "sb"))
-    (spark.createDataFrame(
-        [row],
-        "n_docs long, sum_dl long, avgdl double, n_title long, "
-        "sum_title long, n_body long, sum_body long")
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(tmp, "stats")))
-    _publish(tmp, out_path, preexisting, mode=base_mode)
+        n_docs = st["n_docs"] - removed["n"] + added["n"]
+        sum_dl = st["sum_dl"] - removed["dl"] + added["dl"]
+        row = (n_docs, sum_dl, sum_dl / n_docs,
+               _u(st["n_title"], "nt"), _u(st["sum_title"], "st"),
+               _u(st["n_body"], "nb"), _u(st["sum_body"], "sb"))
+        (spark.createDataFrame(
+            [row],
+            "n_docs long, sum_dl long, avgdl double, n_title long, "
+            "sum_title long, n_body long, sum_body long")
+         .coalesce(1).write.mode("overwrite")
+         .parquet(os.path.join(tmp, "stats")))
+        _stamp_meta(tmp, base_mode)
 
 
 def q_rescore_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,12 +1243,8 @@ GROUP BY tok.doc_id"""
 
 
 def write_alias(alias_path: str, index_path: str) -> None:
-    """Atomically point ``alias_path`` at ``index_path`` (tmp + rename —
-    same publish discipline as the index itself)."""
-    tmp = f"{alias_path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"index": index_path}, f)
-    os.replace(tmp, alias_path)
+    """Atomically point ``alias_path`` at ``index_path``."""
+    artifact.write_json(alias_path, {"index": index_path})
 
 
 def resolve_alias(alias_path: str) -> str:

@@ -58,14 +58,12 @@ serving reads only the query terms' bucket directories.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark import artifact
 from elasticsearch_hbase_river_spark.functions.analyzer import (
     analyze_tokens,
     analyze_toks_sql,
@@ -457,81 +455,74 @@ def build_nested_index(spark: SparkSession, fcells: DataFrame,
     themselves (ES's ``_source``), doc-bucket-partitioned for point
     lookups. Fully distributed; the only driver work is the atomic
     publish rename."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with artifact.publishing(path, _META) as tmp:
+        # Independent parquet writes overlapped per optimization guide §2.6:
+        # docstore / fpostings / fdoclen derive only from their inputs and
+        # run concurrently; fvocab (from landed fpostings) and fstats (from
+        # landed fdoclen + fcells) follow in a second overlapped pair.
+        def _docstore() -> None:
+            (assembled
+             .withColumn("dbucket", _tbucket(F.col("doc_id")))
+             .repartition(N_FBUCKETS, "dbucket")
+             .write.mode("overwrite").partitionBy("dbucket")
+             .parquet(os.path.join(tmp, "docstore")))
 
-    # Independent parquet writes overlapped per optimization guide §2.6:
-    # docstore / fpostings / fdoclen derive only from their inputs and
-    # run concurrently; fvocab (from landed fpostings) and fstats (from
-    # landed fdoclen + fcells) follow in a second overlapped pair.
-    def _docstore() -> None:
-        (assembled
-         .withColumn("dbucket", _tbucket(F.col("doc_id")))
-         .repartition(N_FBUCKETS, "dbucket")
-         .write.mode("overwrite").partitionBy("dbucket")
-         .parquet(os.path.join(tmp, "docstore")))
+        def _fpostings_land() -> None:
+            (_fpostings(fcells)
+             .withColumn("tbucket", _tbucket(F.col("token")))
+             .repartition(N_FBUCKETS, "tbucket")
+             .write.mode("overwrite").partitionBy("tbucket")
+             .parquet(os.path.join(tmp, "fpostings")))
 
-    def _fpostings_land() -> None:
-        (_fpostings(fcells)
-         .withColumn("tbucket", _tbucket(F.col("token")))
-         .repartition(N_FBUCKETS, "tbucket")
-         .write.mode("overwrite").partitionBy("tbucket")
-         .parquet(os.path.join(tmp, "fpostings")))
+        # per-(doc, field) lengths come map-side from the fielded melt (one
+        # row each — a projection), NOT from a distinct over the corpus-sized
+        # postings table; persisted as the fdoclen sidecar (dbucket-pruned
+        # reads power the live-serving stat corrections)
+        def _fdoclen() -> None:
+            (_field_dl(fcells)
+             .withColumn("dbucket", _tbucket(F.col("doc_id")))
+             .repartition(N_FBUCKETS, "dbucket")
+             .write.mode("overwrite").partitionBy("dbucket")
+             .parquet(os.path.join(tmp, "fdoclen")))
 
-    # per-(doc, field) lengths come map-side from the fielded melt (one
-    # row each — a projection), NOT from a distinct over the corpus-sized
-    # postings table; persisted as the fdoclen sidecar (dbucket-pruned
-    # reads power the live-serving stat corrections)
-    def _fdoclen() -> None:
-        (_field_dl(fcells)
-         .withColumn("dbucket", _tbucket(F.col("doc_id")))
-         .repartition(N_FBUCKETS, "dbucket")
-         .write.mode("overwrite").partitionBy("dbucket")
-         .parquet(os.path.join(tmp, "fdoclen")))
+        stage1 = [_fpostings_land, _fdoclen]
+        if assembled is not None:
+            stage1.append(_docstore)
+        run_jobs(*stage1)
 
-    stage1 = [_fpostings_land, _fdoclen]
-    if assembled is not None:
-        stage1.append(_docstore)
-    run_jobs(*stage1)
+        def _fvocab() -> None:
+            (spark.read.parquet(os.path.join(tmp, "fpostings"))
+             .groupBy("field", "token")
+             .agg(F.count(F.lit(1)).cast("long").alias("df"))
+             .withColumn("tbucket", _tbucket(F.col("token")))
+             .repartition(N_FBUCKETS, "tbucket")
+             .write.mode("overwrite").partitionBy("tbucket")
+             .parquet(os.path.join(tmp, "fvocab")))
 
-    def _fvocab() -> None:
-        (spark.read.parquet(os.path.join(tmp, "fpostings"))
-         .groupBy("field", "token")
-         .agg(F.count(F.lit(1)).cast("long").alias("df"))
-         .withColumn("tbucket", _tbucket(F.col("token")))
-         .repartition(N_FBUCKETS, "tbucket")
-         .write.mode("overwrite").partitionBy("tbucket")
-         .parquet(os.path.join(tmp, "fvocab")))
+        def _fstats() -> None:
+            stats = (spark.read.parquet(os.path.join(tmp, "fdoclen"))
+                     .groupBy("field")
+                     .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
+                          F.sum("dl").cast("long").alias("sum_dl"),
+                          (F.sum("dl").cast("double") / F.count(F.lit(1)))
+                          .alias("avgdl")))
+            exists = (fcells.filter(F.col("value").isNotNull()
+                                    & (F.col("value") != ""))
+                      .groupBy("field")
+                      .agg(F.count(F.lit(1)).cast("long").alias("n_exists")))
+            (stats.join(exists, "field", "full_outer")
+             .select("field",
+                     F.coalesce("n_docs", F.lit(0)).alias("n_docs"),
+                     F.coalesce("sum_dl", F.lit(0)).alias("sum_dl"),
+                     F.coalesce("avgdl", F.lit(0.0)).alias("avgdl"),
+                     F.coalesce("n_exists", F.lit(0)).alias("n_exists"))
+             .coalesce(1)
+             .write.mode("overwrite").parquet(os.path.join(tmp, "fstats")))
 
-    def _fstats() -> None:
-        stats = (spark.read.parquet(os.path.join(tmp, "fdoclen"))
-                 .groupBy("field")
-                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                      F.sum("dl").cast("long").alias("sum_dl"),
-                      (F.sum("dl").cast("double") / F.count(F.lit(1)))
-                      .alias("avgdl")))
-        exists = (fcells.filter(F.col("value").isNotNull()
-                                & (F.col("value") != ""))
-                  .groupBy("field")
-                  .agg(F.count(F.lit(1)).cast("long").alias("n_exists")))
-        (stats.join(exists, "field", "full_outer")
-         .select("field",
-                 F.coalesce("n_docs", F.lit(0)).alias("n_docs"),
-                 F.coalesce("sum_dl", F.lit(0)).alias("sum_dl"),
-                 F.coalesce("avgdl", F.lit(0.0)).alias("avgdl"),
-                 F.coalesce("n_exists", F.lit(0)).alias("n_exists"))
-         .coalesce(1)
-         .write.mode("overwrite").parquet(os.path.join(tmp, "fstats")))
-
-    run_jobs(_fvocab, _fstats)
-    with open(os.path.join(tmp, _META), "w") as f:
-        json.dump({"layout": NESTED_LAYOUT_VERSION,
-                   "n_buckets": N_FBUCKETS}, f)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, _META)):
-            raise
+        run_jobs(_fvocab, _fstats)
+        artifact.write_json(os.path.join(tmp, _META),
+                            {"layout": NESTED_LAYOUT_VERSION,
+                             "n_buckets": N_FBUCKETS})
 
 
 def _assembled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -883,40 +874,34 @@ def ensure_nested_live_epochs(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent churn epoch in the nested-epochs layout (fpostings/ +
     fdl/ + docs/ per epoch + marker), fingerprint-keyed."""
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        _NESTED_EPOCHS_META,
         _stamp_nested_epochs_layout,
     )
 
     path = nested_index_path_for(sf_dir) + "-live-epochs"
-    marker = os.path.join(path, "_nested_epochs_meta.json")
-    if os.path.exists(marker):
+    if os.path.exists(os.path.join(path, _NESTED_EPOCHS_META)):
         return path
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    churned = (load_table(spark, sf_dir, "events")
-               .filter(_nlive_churn_sel())
-               .withColumn("value", F.col("value") + NLIVE_VALUE_BUMP))
-    fc = fielded_cells_from(sparse_melt(churned))
-    # three independent writes from the same churned relation —
-    # overlapped (guide §2.6)
-    run_jobs(
-        lambda: (_fpostings(fc).write.mode("overwrite")
-                 .parquet(f"{tmp}/fpostings/epoch=0")),
-        lambda: (_field_dl(fc).write.mode("overwrite")
-                 .parquet(f"{tmp}/fdl/epoch=0")),
-        lambda: (churned.select(
-            F.col("event_id").cast("string").alias("doc_id"))
-            .distinct().write.mode("overwrite")
-            .parquet(f"{tmp}/docs/epoch=0")))
-    # length-stats sidecar: the serve path reads these tiny sums instead
-    # of re-deriving the base removal per query
-    write_nested_epoch_stats_sidecar(
-        spark, ensure_nested_index(spark, sf_dir), tmp, 0)
-    _stamp_nested_epochs_layout(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise
+    with artifact.publishing(path, _NESTED_EPOCHS_META) as tmp:
+        churned = (load_table(spark, sf_dir, "events")
+                   .filter(_nlive_churn_sel())
+                   .withColumn("value", F.col("value") + NLIVE_VALUE_BUMP))
+        fc = fielded_cells_from(sparse_melt(churned))
+        # three independent writes from the same churned relation —
+        # overlapped (guide §2.6)
+        run_jobs(
+            lambda: (_fpostings(fc).write.mode("overwrite")
+                     .parquet(f"{tmp}/fpostings/epoch=0")),
+            lambda: (_field_dl(fc).write.mode("overwrite")
+                     .parquet(f"{tmp}/fdl/epoch=0")),
+            lambda: (churned.select(
+                F.col("event_id").cast("string").alias("doc_id"))
+                .distinct().write.mode("overwrite")
+                .parquet(f"{tmp}/docs/epoch=0")))
+        # length-stats sidecar: the serve path reads these tiny sums instead
+        # of re-deriving the base removal per query
+        write_nested_epoch_stats_sidecar(
+            spark, ensure_nested_index(spark, sf_dir), tmp, 0)
+        _stamp_nested_epochs_layout(tmp)
     return path
 
 

@@ -71,6 +71,7 @@ def q_cellstore_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from elasticsearch_hbase_river_spark import artifact
     from elasticsearch_hbase_river_spark.sources import cellstore
 
     # Cache key includes the fixture file's identity (size+mtime), so a
@@ -82,11 +83,9 @@ def q_cellstore_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(),
         "spark_graft_cellstore_" + hashlib.md5(key.encode()).hexdigest()[:12])
     if not os.path.exists(os.path.join(store, cellstore.MANIFEST)):
-        tmp = store + ".building"
-        cellstore.write_cellstore(cells_from_events(spark, sf_dir), tmp,
-                                  n_regions=8)
-        if not os.path.exists(store):
-            os.replace(tmp, store)
+        with artifact.publishing(store, cellstore.MANIFEST) as tmp:
+            cellstore.write_cellstore(cells_from_events(spark, sf_dir), tmp,
+                                      n_regions=8)
     cellstore.register(spark)
     return (spark.read.format("cellstore").option("path", store).load()
             .filter(F.col("ts_ms") > WATERMARK_MS))

@@ -436,28 +436,6 @@ def _sem_assign(emb: DataFrame, cent_rows: list) -> DataFrame:
     return emb.select("vec_id", "embedding", kpick.cast("int").alias("k"))
 
 
-def _sem_centroid_rows(assigned: DataFrame,
-                       kcol: str = "k") -> list[tuple[int, list[float]]]:
-    """Per-cluster centroid components via posexplode + (k, pos) partial
-    aggregation, assembled DRIVER-side (K·dim rows, constant-bounded).
-    The exploded corpus collapses map-side onto K·dim groups before the
-    shuffle, so the wire carries K·dim·partitions rows regardless of
-    corpus size; the previous dim-wide column aggregate (64 rounded AVG
-    columns) was shuffle-optimal too but spent ~2 s PER Lloyd call in
-    codegen of the wide aggregate — the measured bottleneck, since every
-    caller collects the K-row result anyway."""
-    cv = roundn_col(F.avg(F.col("v").cast("double")), 4)
-    rows = (assigned
-            .select(F.col(kcol).alias("k"),
-                    F.posexplode("embedding").alias("pos", "v"))
-            .groupBy("k", "pos").agg(cv.alias("cv")).collect())
-    cents: dict[int, dict[int, float]] = {}
-    for r in rows:
-        cents.setdefault(int(r["k"]), {})[int(r["pos"])] = float(r["cv"])
-    return sorted((k, [d[p] for p in sorted(d)])
-                  for k, d in cents.items())
-
-
 def _sem_cents_1row(assigned_k: DataFrame) -> DataFrame:
     """Lloyd re-estimation as a 1-ROW relation: from a (k, embedding)
     assignment, per-(k, pos) rounded component means (posexplode +

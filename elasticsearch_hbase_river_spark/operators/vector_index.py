@@ -20,9 +20,8 @@ Layout (a directory of portable parquet, same discipline as
   (``N_PROBE/N_CELLS``) is what bounds query cost, not corpus size.
 - ``centroids/`` — (cell, centroid, cnorm): the coarse quantizer. Tiny
   (k × dim doubles); always broadcast.
-- ``_vindex_meta.json`` — fingerprint + cell count; published atomically
-  (tmp dir + rename — concurrent builders race safely, readers never see a
-  partial index).
+- ``_vindex_meta.json`` — cell count; the marker the directory is
+  published with (``artifact.publishing``).
 
 The coarse quantizer matches ``q_ann_ivf``'s (per-label centroids, means
 rounded to 4 decimals for cross-engine determinism), so
@@ -38,15 +37,13 @@ cell partition).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark import artifact
 from elasticsearch_hbase_river_spark.functions.determinism import roundn_col
 from elasticsearch_hbase_river_spark.operators.similarity import (
     IVF_TOP_K,
@@ -94,42 +91,25 @@ def _centroids_of(cells: DataFrame) -> DataFrame:
     )
 
 
-def _publish(spark: SparkSession, assigned: DataFrame, path: str) -> None:
-    """Land (cell, vec_id, embedding) in the serving layout atomically.
-    One repartition on the cell key so each writer task owns whole cells;
+def _build(spark: SparkSession, assigned: DataFrame, path: str) -> None:
+    """Land (cell, vec_id, embedding) in the serving layout, published
+    through :func:`artifact.publishing` with META as the marker. One
+    repartition on the cell key so each writer task owns whole cells;
     ``enorm`` is precomputed at build time so queries never re-fold the
     array for the norm."""
-    # A destination that exists BEFORE the build starts is a caller error
-    # (e.g. upsert_vectors into an occupied out_path): proceeding would end
-    # in a failed rename that silently leaves the STALE index in place while
-    # the caller believes the merge landed. Only a destination that appears
-    # DURING the build is a genuine lost race to identical content
-    # (fingerprint-keyed paths), which is safe to concede below.
-    preexisting = os.path.exists(os.path.join(path, META))
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    (assigned
-     .select("cell", "vec_id", "embedding",
-             _norm(F.col("embedding")).alias("enorm"))
-     .repartition("cell")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(os.path.join(tmp, "cells")))
-    landed = spark.read.parquet(os.path.join(tmp, "cells"))
-    (_centroids_of(landed).coalesce(1)
-     .write.mode("overwrite").parquet(os.path.join(tmp, "centroids")))
-    n_cells = spark.read.parquet(os.path.join(tmp, "centroids")).count()
-    with open(os.path.join(tmp, META), "w") as f:
-        json.dump({"n_cells": int(n_cells)}, f)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        # Swallowing the failure is only correct for a genuine lost race
-        # (a concurrent builder published the SAME fingerprint-keyed index
-        # while we were building). Pre-existing destination or any other
-        # rename failure: re-raise — stale data standing in for the merge
-        # the caller asked for is silent data loss.
-        if preexisting or not os.path.exists(os.path.join(path, META)):
-            raise
+    with artifact.publishing(path, META) as tmp:
+        (assigned
+         .select("cell", "vec_id", "embedding",
+                 _norm(F.col("embedding")).alias("enorm"))
+         .repartition("cell")
+         .write.mode("overwrite").partitionBy("cell")
+         .parquet(os.path.join(tmp, "cells")))
+        landed = spark.read.parquet(os.path.join(tmp, "cells"))
+        (_centroids_of(landed).coalesce(1)
+         .write.mode("overwrite").parquet(os.path.join(tmp, "centroids")))
+        n_cells = spark.read.parquet(os.path.join(tmp, "centroids")).count()
+        artifact.write_json(os.path.join(tmp, META),
+                            {"n_cells": int(n_cells)})
 
 
 def build_vector_index(spark: SparkSession, emb: DataFrame, path: str) -> None:
@@ -137,8 +117,8 @@ def build_vector_index(spark: SparkSession, emb: DataFrame, path: str) -> None:
     The coarse quantizer assigns cell = label (matching ``q_ann_ivf``'s
     per-label centroids; a label-free corpus would run k-means — see
     ``operators/graph.py:q_kmeans`` — and assign by nearest centroid)."""
-    _publish(spark, emb.select(F.col("label").alias("cell"),
-                               "vec_id", "embedding"), path)
+    _build(spark, emb.select(F.col("label").alias("cell"),
+                             "vec_id", "embedding"), path)
 
 
 def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
@@ -221,7 +201,7 @@ def upsert_vectors(spark: SparkSession, path: str, delta: DataFrame,
         .filter(F.col("rn") == 1)
         .select("cell", "vec_id", "embedding")
     )
-    _publish(spark, merged, out_path)
+    _build(spark, merged, out_path)
 
 
 QUERIES = {

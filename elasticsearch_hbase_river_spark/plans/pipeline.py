@@ -18,7 +18,6 @@ upsert is a per-id window rank, and the sink write batches per partition
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -27,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark import artifact
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.operators.assemble import _esc_json
 
@@ -260,11 +260,8 @@ def _check_bands_format(bands_path: str) -> None:
     discard) the history explicitly. Old ``streaming_near_dedup``
     checkpoints have the same incompatibility (STRING grouping key) and
     must be discarded alongside."""
-    meta = os.path.join(bands_path, _BANDS_META)
-    found: object = None
-    if os.path.exists(meta):
-        with open(meta) as f:
-            found = json.load(f).get("format_version")
+    found = (artifact.read_json(os.path.join(bands_path, _BANDS_META))
+             or {}).get("format_version")
     if found != BANDS_FORMAT_VERSION:
         raise ValueError(
             f"persistent band table at {bands_path} has format_version="
@@ -276,12 +273,9 @@ def _check_bands_format(bands_path: str) -> None:
 
 
 def _stamp_bands_format(bands_path: str, ticks_since_compact: int = 0) -> None:
-    meta = os.path.join(bands_path, _BANDS_META)
-    tmp = f"{meta}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"format_version": BANDS_FORMAT_VERSION,
-                   "ticks_since_compact": ticks_since_compact}, f)
-    os.replace(tmp, meta)
+    artifact.write_json(os.path.join(bands_path, _BANDS_META),
+                        {"format_version": BANDS_FORMAT_VERSION,
+                         "ticks_since_compact": ticks_since_compact})
 
 
 #: Compact the band table every N append ticks (same decoupled-cadence
@@ -299,11 +293,8 @@ def band_ticks_since_compact(bands_path: str) -> int:
     """Append ticks since the last compaction (0 for a fresh/absent sink;
     pre-counter metas read as 0 — the first post-upgrade append starts
     the count)."""
-    meta = os.path.join(bands_path, _BANDS_META)
-    if not os.path.exists(meta):
-        return 0
-    with open(meta) as f:
-        return int(json.load(f).get("ticks_since_compact", 0))
+    meta = artifact.read_json(os.path.join(bands_path, _BANDS_META)) or {}
+    return int(meta.get("ticks_since_compact", 0))
 
 
 def band_compaction_due(bands_path: str,
@@ -325,22 +316,17 @@ BANDS_BYTES_PER_FILE = 25 * 1024 * 1024
 def _assert_no_interrupted_compaction(bands_path: str) -> None:
     """Make the compaction swap window LOUD instead of lossy.
 
-    :func:`compact_band_table` renames the live directory aside before
-    renaming the rewrite in; a crash between the two leaves no
-    ``bands_path`` at all — and a fresh tick would then silently treat
+    :func:`compact_band_table` swaps the rewrite in with
+    :func:`artifact.replace_dir`; a crash between its two renames leaves
+    no ``bands_path`` at all — and a fresh tick would then silently treat
     the sink as empty, accept every near-duplicate of the stranded
     history, and start a new table (the exact silent-reset this module's
     format marker exists to prevent). So: a missing ``bands_path`` with a
-    stranded ``.old-*`` sibling REFUSES with recovery instructions. A
-    stranded ``.old-*`` NEXT TO a live marker-valid ``bands_path`` is the
-    benign tail of the swap (crash after the rename-in, before cleanup) —
-    superseded, removed here."""
-    parent = os.path.dirname(os.path.abspath(bands_path)) or "."
-    base = os.path.basename(os.path.abspath(bands_path))
-    if not os.path.isdir(parent):
-        return
-    stranded = [os.path.join(parent, e) for e in os.listdir(parent)
-                if e.startswith(f"{base}.old-")]
+    stranded sibling REFUSES with recovery instructions. A stranded
+    sibling NEXT TO a live marker-valid ``bands_path`` is the benign tail
+    of the swap (crash after the rename-in, before cleanup) — superseded,
+    removed here."""
+    stranded = artifact.stranded(bands_path)
     if not stranded:
         return
     if os.path.exists(os.path.join(bands_path, _BANDS_META)):
@@ -370,13 +356,13 @@ def compact_band_table(spark: SparkSession, bands_path: str,
     pass: the output file count comes from the input BYTES (already
     listed), and the row count from the rewrite's parquet footers — the
     earlier count()-then-rewrite shape scanned the accreted table twice,
-    doubling exactly the I/O compaction exists to save. Single-writer
-    swap discipline: the rewrite lands in a tmp dir, the old directory
-    moves aside, tmp renames in, old is dropped; the swap window is
-    guarded by :func:`_assert_no_interrupted_compaction` (a mid-swap
-    crash refuses the next tick with recovery instructions instead of
-    silently resetting history). Run it from the (single) maintenance
-    tick, not concurrently with an append."""
+    doubling exactly the I/O compaction exists to save. Single writer:
+    the rewrite lands in a tmp dir that :func:`artifact.replace_dir`
+    swaps in; the swap window is guarded by
+    :func:`_assert_no_interrupted_compaction` (a mid-swap crash refuses
+    the next tick with recovery instructions instead of silently
+    resetting history). Run it from the (single) maintenance tick, not
+    concurrently with an append."""
     _assert_no_interrupted_compaction(bands_path)
     _check_bands_format(bands_path)
     before = _band_files(bands_path)
@@ -391,10 +377,7 @@ def compact_band_table(spark: SparkSession, bands_path: str,
 
     rows = sum(pq.ParquetFile(f).metadata.num_rows
                for f in _band_files(tmp))
-    old = f"{bands_path}.old-{uuid.uuid4().hex}"
-    os.rename(bands_path, old)
-    os.rename(tmp, bands_path)
-    shutil.rmtree(old, ignore_errors=True)
+    artifact.replace_dir(tmp, bands_path)
     return {"rows": rows, "files_before": len(before),
             "files_after": len(_band_files(bands_path))}
 

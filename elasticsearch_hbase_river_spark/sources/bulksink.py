@@ -40,6 +40,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import Row, StructType
 
+from elasticsearch_hbase_river_spark import artifact
+
 MANIFEST = "_bulk_manifest.json"
 
 ES_INDEX = "river"
@@ -87,8 +89,8 @@ def _write_bulks(path: str, rows: Iterator[Row], batch_size: int,
     return BulkCommit(files=tuple(files), n_docs=n_docs, n_bulks=len(files))
 
 
-def _publish(path: str, messages: List[Optional[WriterCommitMessage]],
-             overwrite: bool, epoch: int | None = None) -> None:
+def _commit(path: str, messages: List[Optional[WriterCommitMessage]],
+            overwrite: bool, epoch: int | None = None) -> None:
     """Driver-side atomic publication: merge (or replace) the manifest.
 
     With an ``epoch``, publication is idempotent: replaying an
@@ -103,9 +105,8 @@ def _publish(path: str, messages: List[Optional[WriterCommitMessage]],
             n_docs += m.n_docs
     mpath = os.path.join(path, MANIFEST)
     state = {"bulks": [], "n_docs": 0, "epochs": []}
-    if not overwrite and os.path.exists(mpath):
-        with open(mpath) as f:
-            state = json.load(f)
+    if not overwrite:
+        state = artifact.read_json(mpath) or state
     if epoch is not None and epoch in state["epochs"]:
         for fname in new_files:
             try:
@@ -117,10 +118,7 @@ def _publish(path: str, messages: List[Optional[WriterCommitMessage]],
     state["n_docs"] += n_docs
     if epoch is not None:
         state["epochs"].append(epoch)
-    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, mpath)
+    artifact.write_json(mpath, state)
 
 
 def _discard(path: str, messages: List[Optional[WriterCommitMessage]]) -> None:
@@ -151,7 +149,7 @@ class BulkSinkWriter(DataSourceWriter):
                             self.index, self.doc_type)
 
     def commit(self, messages: List[Optional[WriterCommitMessage]]) -> None:
-        _publish(self.path, messages, self.overwrite, epoch=self.epoch)
+        _commit(self.path, messages, self.overwrite, epoch=self.epoch)
 
     def abort(self, messages: List[Optional[WriterCommitMessage]]) -> None:
         _discard(self.path, messages)
@@ -171,7 +169,7 @@ class BulkSinkStreamWriter(DataSourceStreamWriter):
 
     def commit(self, messages: List[Optional[WriterCommitMessage]],
                batchId: int) -> None:  # noqa: N803
-        _publish(self.path, messages, overwrite=False, epoch=batchId)
+        _commit(self.path, messages, overwrite=False, epoch=batchId)
 
     def abort(self, messages: List[Optional[WriterCommitMessage]],
               batchId: int) -> None:  # noqa: N803

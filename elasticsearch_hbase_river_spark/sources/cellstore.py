@@ -32,7 +32,8 @@ Storage assumption (reader AND writer): the store ``path`` must be on
 storage every executor and the driver can reach — a shared mount
 (NFS / fuse-mounted object store) on a real cluster, the local filesystem
 in tests. This is the same contract as any Spark file-based source; the
-per-task ``os.replace`` publish is atomic on POSIX-semantics mounts.
+per-task ``artifact.replace_file`` publish is atomic on POSIX-semantics
+mounts.
 
 Usage note: open a fresh ``spark.read.format("cellstore")...load()`` per
 tick — the region list binds when a plan is first executed, so a reused
@@ -45,7 +46,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import uuid
 from collections.abc import Iterable, Iterator, Sequence
 from dataclasses import dataclass
 from typing import Any
@@ -63,6 +63,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from elasticsearch_hbase_river_spark import artifact
+
 #: The canonical cells schema (sources/cells.py docstring).
 CELLS_DDL = "row_key STRING, family STRING, qualifier STRING, value STRING, ts_ms BIGINT"
 
@@ -76,15 +78,13 @@ _MANIFEST_ROW_DDL = ("file string, start_key string, end_key string, "
 
 def _write_region_files(df, path: str, start_idx: int) -> list[dict[str, Any]]:
     """Distributed region writer: each Spark partition writes its own sorted
-    parquet region file (atomic tmp-file + rename, so task retries are safe)
+    parquet region file (``artifact.replace_file``, so task retries are safe)
     and emits ONE manifest row. Only those bounded manifest rows — one per
     region, never cell data — reach the driver. This is the 100 TB write
     path: 1000 regions → 1000 parallel writer tasks."""
     target = os.path.abspath(path)
 
     def write_partition(batches):
-        import uuid
-
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -96,9 +96,8 @@ def _write_region_files(df, path: str, start_idx: int) -> list[dict[str, Any]]:
         tbl = pa.Table.from_batches(batches)
         pid = TaskContext.get().partitionId()
         fname = f"region-{start_idx + pid:05d}.parquet"
-        tmp = os.path.join(target, f".{fname}.{uuid.uuid4().hex}.tmp")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(target, fname))
+        artifact.replace_file(os.path.join(target, fname),
+                              lambda tmp: pq.write_table(tbl, tmp))
         keys, ts = tbl.column("row_key"), tbl.column("ts_ms")
         yield pa.RecordBatch.from_pylist([{
             "file": fname,
@@ -127,7 +126,7 @@ def write_cellstore(cells_df, path: str, n_regions: int = 8) -> None:
     sharded = (cells_df.repartitionByRange(n_regions, "row_key")
                .sortWithinPartitions("row_key", "family", "qualifier"))
     regions = _write_region_files(sharded, path, start_idx=0)
-    _publish_manifest(path, regions)
+    artifact.write_json(os.path.join(path, MANIFEST), {"regions": regions})
 
 
 def append_cells(cells_df, path: str, n_regions: int = 1) -> None:
@@ -147,7 +146,8 @@ def append_cells(cells_df, path: str, n_regions: int = 1) -> None:
                                       start_idx=_next_region_idx(existing))
     if not new_regions:
         return
-    _publish_manifest(path, existing + new_regions)
+    artifact.write_json(os.path.join(path, MANIFEST),
+                        {"regions": existing + new_regions})
 
 
 def _next_region_idx(existing: list[dict[str, Any]]) -> int:
@@ -157,16 +157,6 @@ def _next_region_idx(existing: list[dict[str, Any]]) -> int:
         if m:
             hi = max(hi, int(m.group(1)))
     return hi + 1
-
-
-def _publish_manifest(path: str, regions: list[dict[str, Any]]) -> None:
-    """Atomic manifest publish (tmp + ``os.replace``), matching the region
-    files' rename discipline: a concurrent reader on a shared mount sees
-    either the old or the new manifest, never a truncated JSON."""
-    tmp = os.path.join(path, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"regions": regions}, f)
-    os.replace(tmp, os.path.join(path, MANIFEST))
 
 
 def _load_manifest(path: str) -> list[dict[str, Any]]:

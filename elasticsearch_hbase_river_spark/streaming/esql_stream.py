@@ -52,13 +52,13 @@ instead of silently merging incompatible partials.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark import artifact
 from elasticsearch_hbase_river_spark.esql import (
     DEFAULT_POLICIES,
     DEFAULT_TS_SPECS,
@@ -242,10 +242,8 @@ def plan_esql_stream(text: str) -> dict:
 
 def _stamp_state(state_dir: str, text: str, mode: str,
                  extra: Optional[dict] = None) -> None:
-    marker = os.path.join(state_dir, _META)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            meta = json.load(f)
+    meta = artifact.read_json(os.path.join(state_dir, _META))
+    if meta is not None:
         if meta.get("query_sha") != _query_sha(text):
             raise ValueError(
                 f"esql stream state at {state_dir} was built for a "
@@ -253,28 +251,20 @@ def _stamp_state(state_dir: str, text: str, mode: str,
                 f"{meta.get('query_sha')} != {_query_sha(text)}); refusing "
                 "to merge incompatible partials")
         return
-    if os.path.isdir(state_dir) and any(
-            n for n in os.listdir(state_dir) if not n.startswith("_")):
+    if any(not n.startswith("_") for n in artifact.visible(state_dir)):
         raise ValueError(
             f"{state_dir} is non-empty but carries no esql-stream marker; "
             "refusing a foreign layout")
     os.makedirs(state_dir, exist_ok=True)
-    with open(marker, "w") as f:
-        json.dump({"query_sha": _query_sha(text), "mode": mode,
-                   "text": text, **(extra or {})}, f)
-
-
-def _read_meta(state_dir: str) -> dict:
-    with open(os.path.join(state_dir, _META)) as f:
-        return json.load(f)
+    artifact.write_json(os.path.join(state_dir, _META),
+                        {"query_sha": _query_sha(text), "mode": mode,
+                         "text": text, **(extra or {})})
 
 
 def _check_state(state_dir: str, text: str) -> None:
-    marker = os.path.join(state_dir, _META)
-    if not os.path.exists(marker):
+    meta = artifact.read_json(os.path.join(state_dir, _META))
+    if meta is None:
         raise ValueError(f"{state_dir} carries no esql-stream marker")
-    with open(marker) as f:
-        meta = json.load(f)
     if meta.get("query_sha") != _query_sha(text):
         raise ValueError(
             f"esql stream state at {state_dir} belongs to a different "
@@ -490,7 +480,8 @@ def read_esql_stream_result(spark: SparkSession, text: str,
     keys = plan["key_names"]
     if plan["ts"]:
         part = spark.read.parquet(f"{state_dir}/partials").drop("epoch")
-        dims = _read_meta(state_dir)["series_dims"]
+        dims = artifact.read_json(
+            os.path.join(state_dir, _META))["series_dims"]
         g1 = list(dims) + [n for n in keys if n not in dims]
         mcols: list[Column] = []
         for si, (_o, _f, calls, _c) in enumerate(plan["specs"]):

@@ -25,6 +25,8 @@ canonical cells schema.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -33,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from elasticsearch_hbase_river_spark import artifact
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
 
@@ -41,8 +44,8 @@ from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
 #: no manifest. The two are silently incompatible: a v2 writer resumed over
 #: a v1 directory writes beside the old epochs and read_inverted_index
 #: drops them without an error — so the directory carries an explicit
-#: marker (same discipline as the band table's _bands_meta.json) and both
-#: writer and readers refuse a mismatch.
+#: marker (written through ``artifact.write_json``) and both writer and
+#: readers refuse a mismatch.
 EPOCHS_LAYOUT_VERSION = 2
 _EPOCHS_META = "_epochs_meta.json"
 
@@ -55,18 +58,10 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
     read as 'ascii', the only mode that existed): resuming a unicode
     stream over ascii epochs (or vice versa) would merge two
     tokenizations into one index with no error anywhere."""
-    import json as _json
-    import os as _os
-
-    meta = _os.path.join(index_dir, _EPOCHS_META)
-    found: object = None
-    found_mode = "ascii"
-    if _os.path.exists(meta):
-        with open(meta) as f:
-            m = _json.load(f)
-        found = m.get("layout")
-        found_mode = m.get("mode", "ascii")
+    m = artifact.read_json(os.path.join(index_dir, _EPOCHS_META)) or {}
+    found = m.get("layout")
     if found == EPOCHS_LAYOUT_VERSION:
+        found_mode = m.get("mode", "ascii")
         if mode is not None and found_mode != mode:
             raise ValueError(
                 f"index epochs directory {index_dir} was written with "
@@ -75,13 +70,11 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
                 "merged index. Rebuild into a fresh directory (and "
                 "discard the checkpoint) or match the mode.")
         return
-    if found is None and not _os.path.exists(index_dir):
-        return  # nothing written yet; the writer will stamp it
     if found is None:
-        entries = [e for e in _os.listdir(index_dir)
-                   if not e.startswith(".") and e != _EPOCHS_META]
+        entries = [e for e in artifact.visible(index_dir)
+                   if e != _EPOCHS_META]
         if not entries:
-            return
+            return  # nothing written yet; the writer will stamp it
         # A populated but marker-less directory that already HAS the v2
         # shape (postings/ + docs/ subdirs, no v1 epoch=N at the root) was
         # written by this engine immediately before the marker existed —
@@ -92,9 +85,9 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
         # additionally require the epoch=N partition children under both,
         # the shape only this writer produces.
         def _has_epoch_children(sub: str) -> bool:
-            p = _os.path.join(index_dir, sub)
-            return _os.path.isdir(p) and any(
-                e.startswith("epoch=") for e in _os.listdir(p))
+            p = os.path.join(index_dir, sub)
+            return os.path.isdir(p) and any(
+                e.startswith("epoch=") for e in os.listdir(p))
 
         if (all(e in ("postings", "docs") for e in entries)
                 and not any(e.startswith("epoch=") for e in entries)
@@ -111,16 +104,10 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
 
 
 def _stamp_epochs_layout(index_dir: str, mode: str = "ascii") -> None:
-    import json as _json
-    import os as _os
-    import uuid as _uuid
+    os.makedirs(index_dir, exist_ok=True)
+    artifact.write_json(os.path.join(index_dir, _EPOCHS_META),
+                        {"layout": EPOCHS_LAYOUT_VERSION, "mode": mode})
 
-    _os.makedirs(index_dir, exist_ok=True)
-    meta = _os.path.join(index_dir, _EPOCHS_META)
-    tmp = f"{meta}.tmp-{_uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        _json.dump({"layout": EPOCHS_LAYOUT_VERSION, "mode": mode}, f)
-    _os.replace(tmp, meta)
 
 CELLS_SCHEMA = StructType([
     StructField("row_key", StringType()),
@@ -416,98 +403,6 @@ def streaming_near_dedup(spark: SparkSession, docs_source_dir: str,
     )
 
 
-def streaming_latest_version_v2(spark: SparkSession, source_dir: str,
-                                files_per_trigger: int = 16,
-                                state_ttl_ms: int | None = None,
-                                allow_fallback: bool = True) -> DataFrame:
-    """The latest-version-wins operator on the arbitrary-state V2 API
-    (``transformWithStateInPandas``, Spark 4): typed ValueState per row
-    key with optional TTL — the state-hygiene knob the V1 API lacks (an
-    abandoned key's state expires instead of living forever; at 100 TB
-    with churning row keys that difference IS the state-store size).
-
-    Same semantics as :func:`streaming_latest_version`; both are kept —
-    V1 (`applyInPandasWithState`) for the classic shape, V2 as the
-    forward path. Processor class is defined in-function so cloudpickle
-    ships it by value to Python workers.
-
-    NB: the V2 operator requires the RocksDB state store (also the right
-    provider at scale: incremental checkpoints, state larger than heap);
-    this sets the session's provider conf before planning the query. Its
-    control channel also needs ``google.protobuf`` at runtime — a
-    capability probe decides the path: where protobuf is present the query
-    plans on transformWithStateInPandas; where it's absent (this
-    container) the call degrades to the V1 ``applyInPandasWithState``
-    implementation, which has the identical output contract
-    (``_LATEST_OUT_SCHEMA``) and identical latest-version semantics —
-    only the TTL knob has no V1 equivalent, so a TTL request without
-    protobuf raises rather than silently dropping state hygiene.
-    ``allow_fallback=False`` turns the degradation into an ImportError
-    for deployments that require the V2 state store specifically."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        if not allow_fallback:
-            raise ImportError(
-                "transformWithStateInPandas needs google.protobuf (not "
-                "installed in this environment); use "
-                "streaming_latest_version (V1) instead") from e
-        if state_ttl_ms is not None:
-            raise ImportError(
-                "state TTL requires the V2 state API (google.protobuf "
-                "missing) — the V1 fallback cannot honor ttlDurationMs"
-            ) from e
-        return streaming_latest_version(spark, source_dir, files_per_trigger)
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class LatestVersion(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "latest", "ts_ms LONG, n_versions LONG",
-                ttlDurationMs=state_ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (row_key,) = key
-            if self._state.exists():
-                latest, versions = self._state.get()
-            else:
-                latest, versions = None, 0
-            batch_rows = 0
-            for pdf in rows:
-                batch_rows += len(pdf)
-                versions += len(pdf)
-                batch_max = int(pdf["ts_ms"].max())
-                latest = batch_max if latest is None else max(latest, batch_max)
-            self._state.update((int(latest), int(versions)))
-            yield pd.DataFrame({
-                "row_key": [row_key], "latest_ts_ms": [int(latest)],
-                "n_versions": [int(versions)], "batch_rows": [batch_rows]})
-
-        def close(self) -> None:
-            pass
-
-    cells = read_cells_stream(spark, source_dir, files_per_trigger)
-    return (
-        cells.groupBy("row_key")
-        .transformWithStateInPandas(
-            LatestVersion(),
-            outputStructType=_LATEST_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 _LATEST_STATE_SCHEMA = "row_key STRING, ts_ms LONG, n_versions LONG"
 _LATEST_OUT_SCHEMA = ("row_key STRING, latest_ts_ms LONG, n_versions LONG, "
                       "batch_rows LONG")
@@ -705,20 +600,11 @@ _NESTED_EPOCHS_META = "_nested_epochs_meta.json"
 
 
 def _check_nested_epochs_layout(index_dir: str) -> None:
-    import json as _json
-    import os as _os
-
-    meta = _os.path.join(index_dir, _NESTED_EPOCHS_META)
-    found: object = None
-    if _os.path.exists(meta):
-        with open(meta) as f:
-            found = _json.load(f).get("layout")
+    meta = artifact.read_json(os.path.join(index_dir, _NESTED_EPOCHS_META))
+    found = (meta or {}).get("layout")
     if found == NESTED_EPOCHS_LAYOUT_VERSION:
         return
-    if found is None and (
-            not _os.path.exists(index_dir)
-            or not any(e for e in _os.listdir(index_dir)
-                       if not e.startswith("."))):
+    if found is None and not artifact.visible(index_dir):
         return
     raise ValueError(
         f"nested epochs directory {index_dir} has layout={found!r}, engine "
@@ -727,16 +613,9 @@ def _check_nested_epochs_layout(index_dir: str) -> None:
 
 
 def _stamp_nested_epochs_layout(index_dir: str) -> None:
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    _os.makedirs(index_dir, exist_ok=True)
-    meta = _os.path.join(index_dir, _NESTED_EPOCHS_META)
-    tmp = f"{meta}.tmp-{_uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        _json.dump({"layout": NESTED_EPOCHS_LAYOUT_VERSION}, f)
-    _os.replace(tmp, meta)
+    os.makedirs(index_dir, exist_ok=True)
+    artifact.write_json(os.path.join(index_dir, _NESTED_EPOCHS_META),
+                        {"layout": NESTED_EPOCHS_LAYOUT_VERSION})
 
 
 def start_nested_index_stream(spark: SparkSession, cells_source_dir: str,

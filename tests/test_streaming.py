@@ -160,37 +160,6 @@ def test_streaming_latest_version_state(spark, sf_dir, tmp_path):
                          | (F.col("n_versions") != F.col("e_n"))).count() == 0
 
 
-def test_streaming_latest_version_v2_state(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas twin: same per-key invariants as the V1
-    operator across multiple micro-batches. The operator is capability-
-    gated: where google.protobuf (the V2 control channel) is available the
-    plan uses the V2 state API; elsewhere it degrades to the V1 path with
-    the identical output contract — either way THIS test runs the full
-    semantics, and test_v2_strict_mode_raises_without_protobuf pins the
-    gating behavior itself."""
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        streaming_latest_version_v2,
-    )
-
-    src = str(tmp_path / "src_state_v2")
-    _write_cells(spark, sf_dir, src)
-    out = streaming_latest_version_v2(spark, src, files_per_trigger=1)
-    q = (out.writeStream.format("memory").queryName("state_v2_t")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "stream did not drain in 120s"
-    got = spark.table("state_v2_t")
-    cells = cells_from_events(spark, sf_dir)
-    per_key = got.groupBy("row_key").agg(
-        F.max("latest_ts_ms").alias("latest_ts_ms"),
-        F.max("n_versions").alias("n_versions"))
-    expect = cells.groupBy("row_key").agg(
-        F.max("ts_ms").alias("e_ts"), F.count(F.lit(1)).alias("e_n"))
-    joined = per_key.join(expect, "row_key")
-    assert joined.count() == 1000
-    assert joined.filter((F.col("latest_ts_ms") != F.col("e_ts"))
-                         | (F.col("n_versions") != F.col("e_n"))).count() == 0
-
-
 def test_streaming_near_dedup_finds_planted_duplicates(spark, sf_dir, tmp_path):
     """LSH band-bucket state: exact copies arriving on the stream are
     reported as candidate pairs against the originals."""
@@ -416,33 +385,6 @@ def test_index_delta_maintenance_matches_batch_rebuild(spark, sf_dir, tmp_path):
     assert got_s.n_docs == want_s.n_docs
     assert math.isclose(got_s.avgdl, want_s.avgdl, rel_tol=1e-12)
     docs.unpersist()
-
-
-def test_v2_strict_mode_gates_on_protobuf(spark, sf_dir, tmp_path):
-    """The capability gate itself: with protobuf absent, strict mode
-    (allow_fallback=False) and a TTL request must both raise ImportError
-    rather than silently degrade; with protobuf present, strict mode must
-    plan cleanly. Runs meaningfully in either environment."""
-    import pytest
-
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        streaming_latest_version_v2,
-    )
-
-    src = str(tmp_path / "src_gate")
-    _write_cells(spark, sf_dir, src)
-    try:
-        import google.protobuf  # noqa: F401
-        has_pb = True
-    except ImportError:
-        has_pb = False
-    if has_pb:
-        streaming_latest_version_v2(spark, src, allow_fallback=False)
-    else:
-        with pytest.raises(ImportError):
-            streaming_latest_version_v2(spark, src, allow_fallback=False)
-        with pytest.raises(ImportError):
-            streaming_latest_version_v2(spark, src, state_ttl_ms=60000)
 
 
 def test_connector_river_latency_under_trickle(spark, tmp_path):
